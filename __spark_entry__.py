@@ -2174,7 +2174,7 @@ def q84_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefixes probed against the full inverted index — Bayardo WWW'07),
     NOT banding, so the result equals the quadratic containment truth
     the oracle computes: no recall caveat at any threshold."""
-    from semantic_entity_matching_spark.operators.dedup import (
+    from semantic_entity_matching_spark.operators.simjoin import (
         containment_near_duplicates,
     )
 

@@ -10,10 +10,9 @@ The reference renders each document to a matching text in two places:
   pandas NaN stringifying to ``"nan"``, then skipped if empty/"nan"
   (reference lib/evaluate.py:93-107).
 
-Byte-identity is enforced by sharing ONE pure-Python implementation between
-the pytest oracle and the Spark pandas UDFs (both call the functions below),
-so equality is true by construction.  The UDFs are Arrow-batched; the inner
-work is pandas string ops plus a thin per-row join of precomputed pieces.
+The pure-Python functions below are the per-record oracle shared with
+pytest.  The Spark UDFs are Arrow-batched, vectorized twins of them, and
+their byte-identity with the oracle is pinned by tests/test_extract.py.
 """
 
 from __future__ import annotations
@@ -21,9 +20,11 @@ from __future__ import annotations
 from typing import Any
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
 from pyspark.sql.types import StringType
 
 EMBEDDING_COLUMN_SUFFIX = "_embedding"  # reference lib/vectorize_columns.py:34
@@ -77,48 +78,61 @@ def is_skippable_query(text: str) -> bool:
 # ---------------------------------------------------------------------------
 
 
+def _render_valid(col: pa.Array) -> pa.Array:
+    """``str(v)`` of each per-record value ``v`` of ``col``, NULL where
+    :func:`is_valid_value` rejects it.  Strings, integers and booleans
+    render vectorized (Arrow's integer cast and the ``True``/``False``
+    literals are exactly ``str`` of the Python value); every other type —
+    floats (NaN is invalid), lists, arrays — goes through the per-record
+    oracle functions themselves."""
+    t = col.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t) or pa.types.is_integer(t):
+        return col.cast(pa.string())
+    if pa.types.is_boolean(t):
+        return pc.if_else(col, "True", "False")
+    return pa.array(
+        [str(v) if is_valid_value(v) else None for v in col.to_pylist()],
+        pa.string(),
+    )
+
+
 def canonical_text_udf(columns: list[str]) -> Column:
     """Column expression producing ``canonical_entity_text`` over the named
     columns (in order — dict insertion order == column order in the
     reference's `_source`).
 
-    Implemented as one Arrow-batched pandas UDF over a struct of the columns
-    so all values cross the JVM→Python boundary in a single Arrow batch.
+    Implemented as one Arrow UDF over a struct of the columns, so all
+    values cross the JVM→Python boundary in a single Arrow batch and the
+    string work runs in Arrow compute kernels.
 
     The body is a VECTORIZED twin of :func:`canonical_entity_text` (which
-    stays the per-record oracle shared with pytest): per column,
-    ``astype(str)`` renders exactly the values ``str(v)`` renders for the
-    same pandas batch (ints, floats-with-NaN, lists, arrays), ``notna``
-    matches ``is_valid_value`` (None/NaN invalid, list/array cells
-    not-null), and rows accumulate ``"k: v"`` segments joined by newline
-    in column order.  Byte-identity is pinned by
+    stays the per-record oracle shared with pytest): per column, every
+    valid value renders as ``str`` of its per-record Python value
+    (:func:`_render_valid`), and rows accumulate ``"k: v"`` segments joined
+    by newline in column order.  Rendering follows the column's Arrow
+    type, never a pandas dtype: pandas turns a nullable int column into
+    floats in exactly the batches that hold a null, so ``42`` would render
+    ``42.0`` or ``42`` depending on its batch neighbours, and it renders
+    arrays with numpy's repr instead of the list's.  Byte-identity over
+    string, nullable-int, bool and array columns is pinned by
     tests/test_extract.py::test_canonical_text_udf_matches_python.  The
     old ``to_dict(orient="records")`` + per-row join was the single most
     expensive Python stage of the flagship pipeline (measured 1.8 s vs
     0.9 s for the dim-256 embed UDF at sf0.1).
     """
 
-    @pandas_udf(StringType())
-    def _extract(batch: pd.DataFrame) -> pd.Series:
-        n = len(batch)
-        acc = pd.Series([None] * n, dtype=object)
-        for c in batch.columns:
-            if c.endswith(EMBEDDING_COLUMN_SUFFIX):
+    @arrow_udf(StringType())
+    def _extract(batch: pa.Array) -> pa.Array:
+        acc = pa.nulls(len(batch), pa.string())
+        for field, col in zip(batch.type, batch.flatten()):
+            if field.name.endswith(EMBEDDING_COLUMN_SUFFIX):
                 continue
-            s = batch[c]
-            valid = s.notna().to_numpy()
-            if not valid.any():
-                continue
-            rendered = (c + ": ") + s.astype(str)
-            has = acc.notna().to_numpy()
-            both = valid & has
-            first = valid & ~has
-            if both.any():
-                acc[both] = acc[both] + "\n" + rendered[both]
-            if first.any():
-                acc[first] = rendered[first]
+            seg = pc.binary_join_element_wise(
+                field.name + ": ", _render_valid(col), ""
+            )
+            acc = pc.coalesce(pc.binary_join_element_wise(acc, seg, "\n"), acc, seg)
         # a row with no valid cell renders as "\n".join([]) == ""
-        return acc.fillna("")
+        return pc.fill_null(acc, "")
 
     return _extract(F.struct(*[F.col(c) for c in columns]))
 

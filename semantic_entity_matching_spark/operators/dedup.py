@@ -1219,169 +1219,3 @@ def semantic_dedup(
         F.col("centroid_cos").alias("cos"), F.col(id_col).alias("id")
     )
     return _mark_one_survivor(out, "component", key)
-
-
-# ---------------------------------------------------------------------------
-# containment (asymmetric-Jaccard) near-dup — prefix-filtered set join
-# ---------------------------------------------------------------------------
-
-def containment_near_duplicates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    containment_threshold: float = 0.9,
-    max_token_df: int | None = None,
-    hot_token_threshold: int = 20,
-    n_salts: int = 8,
-) -> DataFrame:
-    """Pairs where the SMALLER token set is mostly inside the larger one:
-    ``containment = |A∩B| / min(|A|,|B|) >= threshold`` -> (id_a, id_b,
-    containment, jaccard).
-
-    Symmetric-Jaccard LSH structurally misses small-inside-big duplication
-    (a quote page inside an aggregator page has jaccard |A|/|B| ~ 0 but
-    containment 1), which is why dedup pipelines carry a containment pass
-    alongside MinHash (the reference's kNN retrieval has the same blind
-    spot — cosine over whole-doc embeddings dilutes an embedded fragment;
-    reference lib/opensearch/services/search_query_builder.py:46-62).
-
-    **Exact, not probabilistic**: candidates come from prefix filtering
-    (Chaudhuri/Ganti/Kaushik ICDE'06; Bayardo/Ma/Srikant WWW'07
-    "Scaling Up All Pairs Similarity Search").  Order each doc's distinct
-    tokens rarest-first by global document frequency; if the smaller set A
-    has containment >= t in B then at most ``floor((1-t)·|A|)`` of A's
-    tokens are missing from B, so by pigeonhole at least one of A's first
-    ``floor((1-t)·|A|)+1`` tokens (its PREFIX) appears in B.  Joining
-    (prefix token -> doc) against the full inverted index therefore finds
-    every qualifying pair; each candidate is then verified with the true
-    hashed-token ``array_intersect`` (same JVM set algebra and null/empty
-    semantics as :func:`ngram_jaccard_verify`).  Rarest-first ordering is
-    what makes the probe side cheap: prefix tokens are the doc's rarest,
-    so per-token candidate lists stay short.
-
-    Scale shape (no cross join, no Window):
-
-    * token DF = one (token) hash aggregate over exploded distinct tokens
-      — the n-gram-census shape (functions/textops.py corpus n-grams);
-    * per-doc rarest-first ordering = ``array_sort`` over collected
-      (df, token) structs inside a doc-keyed aggregate — group size is
-      bounded by doc length, never corpus-shaped;
-    * the probe×index token join carries the same Zipf-head discipline as
-      ``pairs.block_pair_stream``: each row KNOWS its token's df, so hot
-      tokens (df > hot_token_threshold) split the big INDEX side across
-      ``n_salts`` reducers via ``pmod(xxhash64(id), s)`` while the small
-      probe side replicates — no size-table join needed at all;
-    * ``max_token_df`` is the vocabulary cap for web scale: tokens in more
-      than that many docs (stopwords/boilerplate) are removed from the
-      UNIVERSE — sets, prefixes, index and the verify step all see the
-      filtered vocabulary, so the result stays exact w.r.t. the filtered
-      token sets (the principled form of "don't index stopwords"; dropping
-      index-side only would silently lose recall).  Default None keeps the
-      full vocabulary (the oracle-comparable form).
-
-    Token-empty docs (blank text, or fully stopword under the cap) emit no
-    keys and never pair — the q21 oracle convention.
-    """
-    t = float(containment_threshold)
-    if not 0.0 < t <= 1.0:
-        raise ValueError(
-            f"containment_threshold must be in (0, 1], got {containment_threshold}"
-        )
-
-    toks = df.select(
-        F.col(id_col),
-        F.transform(_distinct_tokens(text_col), lambda x: F.xxhash64(x)).alias(
-            "_tok"
-        ),
-    )
-    exploded = toks.select(F.col(id_col), F.explode("_tok").alias("_t"))
-    dfreq = exploded.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
-    if max_token_df is not None:
-        dfreq = dfreq.where(F.col("_df") <= int(max_token_df))
-
-    # rarest-first (df asc, token-hash asc — deterministic) per-doc order;
-    # the inner join doubles as the vocabulary filter when max_token_df is
-    # set.  Group size = doc's distinct-token count: bounded, splittable.
-    ranked = (
-        exploded.join(dfreq, "_t")
-        .groupBy(id_col)
-        .agg(
-            F.array_sort(
-                F.collect_list(
-                    F.struct(F.col("_df").alias("df"), F.col("_t").alias("tok"))
-                )
-            ).alias("_st")
-        )
-        .withColumn("_ntok", F.size("_st"))
-        # three consumers (probe, index, verify sets) would each re-run
-        # the tokenize->explode->df->join->agg chain: cut lineage once
-        .localCheckpoint(eager=True)
-    )
-    # floor((1-t)·n)+1, guarded against float-low rounding (an undersized
-    # prefix breaks the pigeonhole guarantee; oversized only costs work)
-    prefix_len = F.least(
-        (F.floor((1.0 - t) * F.col("_ntok") + 1e-9) + 1).cast("int"),
-        F.col("_ntok"),
-    )
-    nsalts = F.when(
-        F.col("_e.df") > int(hot_token_threshold), F.lit(int(n_salts))
-    ).otherwise(F.lit(1))
-    probe = (
-        ranked.select(
-            F.col(id_col).alias("id_p"),
-            F.explode(F.slice("_st", F.lit(1), prefix_len)).alias("_e"),
-        )
-        .select(
-            "id_p",
-            F.col("_e.tok").alias("_t"),
-            F.explode(F.sequence(F.lit(0), nsalts - 1)).alias("_salt"),
-        )
-    )
-    index = ranked.select(
-        F.col(id_col).alias("id_i"),
-        F.explode("_st").alias("_e"),
-    ).select(
-        "id_i",
-        F.col("_e.tok").alias("_t"),
-        F.pmod(F.xxhash64(F.col("id_i")), nsalts).cast("int").alias("_salt"),
-    )
-    cand = (
-        probe.join(index, ["_t", "_salt"])
-        .where(F.col("id_p") != F.col("id_i"))
-        .select(
-            F.least("id_p", "id_i").alias("id_a"),
-            F.greatest("id_p", "id_i").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-    sets = ranked.select(
-        F.col(id_col),
-        F.transform("_st", lambda s: s["tok"]).alias("_tk"),
-        F.col("_ntok"),
-    )
-    a = sets.select(
-        F.col(id_col).alias("id_a"),
-        F.col("_tk").alias("_ta"),
-        F.col("_ntok").alias("_na"),
-    )
-    b = sets.select(
-        F.col(id_col).alias("id_b"),
-        F.col("_tk").alias("_tb"),
-        F.col("_ntok").alias("_nb"),
-    )
-    inter = F.size(F.array_intersect(F.col("_ta"), F.col("_tb")))
-    union = F.col("_na") + F.col("_nb") - inter
-    containment = inter.cast("double") / F.least("_na", "_nb").cast("double")
-    jac = inter.cast("double") / union.cast("double")
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            containment.alias("containment"),
-            jac.alias("jaccard"),
-        )
-        .where(F.col("containment") >= t)
-    )

@@ -13,12 +13,26 @@ classic signature-based similarity joins:
   any pair with jaccard >= t provably shares a signature token, so the
   candidate set is complete, and the final jaccard verification makes the
   output exact.
+* ``containment_near_duplicates`` — the asymmetric form
+  (Chaudhuri/Ganti/Kaushik ICDE'06): containment >= t bounds only the
+  SMALLER set's missing tokens, so its prefix is probed against the other
+  doc's FULL token list.
 * ``edit_distance_join`` — EDJoin-style (Xiao, Wang, Lin, VLDB 2008):
   q-gram signatures under the same global order with prefix length
   ``k*q + 1`` (one edit destroys at most ``q`` overlapping q-grams, so two
   strings within edit distance ``k`` cannot disagree on ``k*q + 1`` rarest
   grams), length filter ``abs(|x|-|y|) <= k`` in the join condition, exact
   ``levenshtein`` verification at the end.
+
+All three run on one prefix-filter core; each caller only tokenizes
+(strings, hashed strings, q-grams), picks a prefix length and adds its
+filters:
+
+* :func:`_df_ordered_tokens` — the global rarest-first token order (and the
+  core's single lineage cut, see its eager-construction contract);
+* :func:`_signature_join` — candidate pairs sharing a signature token;
+* :func:`_overlap_verify` — exact ``array_intersect`` overlap (Jaccard and
+  containment; edit distance verifies with ``levenshtein``).
 
 The reference has no exact-join analog — its candidate generation is ANN
 (reference lib/opensearch/services/search_query_builder.py:43-58) — but its
@@ -27,10 +41,10 @@ rerank stage IS an exact verifier over candidates
 
 Scale shape, by construction:
 * Join keys are the RAREST tokens/grams in the corpus (lowest df under the
-  global order), so the signature join's key distribution is the inverse of
-  the Zipf head — hot boilerplate tokens never become join keys.  This is
-  the opposite failure mode of naive token blocking and the reason the
-  prefix join needs no salting.
+  global order), so a prefix-against-prefix join's key distribution is the
+  inverse of the Zipf head — hot boilerplate tokens never become join keys
+  and need no salting.  Only containment's full-index side sees head tokens
+  as keys, and only it salts them.
 * The df ranking table is vocabulary-cardinality and is joined with a plain
   shuffle join — NEVER broadcast (same rule as the BM25 IDF table,
   operators/search.py).
@@ -46,27 +60,134 @@ from pyspark.sql import functions as F
 
 from semantic_entity_matching_spark.operators.dedup import _distinct_tokens
 
+# Containment's full-index join: a token in more than HOT_TOKEN_THRESHOLD
+# docs spreads its index rows over N_SALTS reducers.
+HOT_TOKEN_THRESHOLD = 20
+N_SALTS = 8
 
-def _df_ordered_tokens(
-    toks: DataFrame, id_out: str = "_id"
-) -> DataFrame:
-    """(id, tok array) -> (id, tokens ordered by (global df asc, token asc),
-    size).  The order is the one global total order every prefix-filter
-    proof requires; ties broken lexically so both engines agree."""
-    ex = toks.select(id_out, F.explode("_tok").alias("_t"))
+
+def _df_ordered_tokens(toks: DataFrame, max_df: int | None = None) -> DataFrame:
+    """``(_id, <per-doc columns>, _tok array)`` -> ``(_id, <per-doc
+    columns>, _ord, _n)``: ``_ord`` holds the doc's tokens as ``(_df, _t)``
+    structs sorted by (global df asc, token asc), ``_n`` its length.  This
+    is the one global total order every prefix-filter proof requires; ties
+    are broken by token so both engines agree.  Token-empty and NULL sets
+    are dropped.
+
+    ``max_df`` caps the vocabulary: tokens in more than that many docs
+    (stopwords/boilerplate) leave the UNIVERSE — orders, prefixes, index and
+    verify all see the filtered sets, so results stay exact w.r.t. them.
+
+    **Eager-construction contract** (all three public joins): this is the
+    core's only lineage cut.  Its consumers (prefix sides, index side,
+    verify sides, the short-string stratum) would otherwise each re-run the
+    tokenize->df->order chain, so it is a ``localCheckpoint(eager=True)``:
+    every public join runs these Spark jobs before it returns, even if the
+    result is never consumed.  The cut is executor-local and NOT replicated
+    — losing an executor fails later jobs on the result instead of
+    recomputing it.
+    """
+    keys = [c for c in toks.columns if c != "_tok"]
+    ex = toks.where(F.size("_tok") > 0).select(
+        *keys, F.explode("_tok").alias("_t")
+    )
     df_tab = ex.groupBy("_t").agg(F.count(F.lit(1)).alias("_df"))
+    if max_df is not None:
+        df_tab = df_tab.where(F.col("_df") <= int(max_df))
     # vocabulary-cardinality table: pinned to a shuffle hash join —
     # Catalyst would broadcast it off small-scale stats, and at web
     # scale the vocabulary cannot broadcast (the BM25 IDF rule; the
-    # plan audit asserts no BroadcastExchange survives in q104)
+    # plan audit asserts no BroadcastExchange survives in q84/q104/q105).
+    # The inner join doubles as the max_df vocabulary filter.
     ranked = ex.join(df_tab.hint("shuffle_hash"), "_t")
     return (
-        ranked.groupBy(id_out)
-        .agg(F.array_sort(F.collect_list(F.struct("_df", "_t"))).alias("_o"))
-        .select(
-            id_out,
-            F.transform("_o", lambda s: s["_t"]).alias("_ord"),
-            F.size("_o").alias("_n"),
+        ranked.groupBy(*keys)
+        .agg(F.array_sort(F.collect_list(F.struct("_df", "_t"))).alias("_ord"))
+        .select(*keys, "_ord", F.size("_ord").alias("_n"))
+        .localCheckpoint(eager=True)
+    )
+
+
+def _signature_rows(ordered: DataFrame, upto: Column) -> DataFrame:
+    """One row per (doc, token) for the doc's first ``upto`` tokens under
+    the global order: per-doc columns plus the token's 0-based position
+    ``_p`` (PPJoin's positional filter), ``_t`` and its df ``_df``."""
+    keys = [c for c in ordered.columns if c != "_ord"]
+    return ordered.select(
+        *keys, F.posexplode(F.slice("_ord", F.lit(1), upto)).alias("_p", "_e")
+    ).select(*keys, "_p", F.col("_e._t").alias("_t"), F.col("_e._df").alias("_df"))
+
+
+def _signature_join(
+    ordered: DataFrame,
+    prefix_len: Column,
+    cond: Column | None = None,
+    full_index: bool = False,
+) -> DataFrame:
+    """Candidate pairs ``(id_a, id_b)``, ``id_a < id_b``, with repeats:
+    distinct docs whose signature rows share a token (and pass ``cond``).
+
+    Both sides are :func:`_signature_rows` aliased ``a`` and ``b``, so
+    ``cond`` can reference e.g. ``a._n`` or ``b._p``.  Side ``b`` is each
+    doc's first ``prefix_len`` tokens.  Side ``a`` is the same prefix
+    (Jaccard, edit distance: a qualifying pair shares a prefix token on
+    both sides) or, with ``full_index``, every token (containment: only the
+    smaller set's prefix must hit the other set).
+
+    The full index carries the Zipf head as join keys, so only that form
+    salts, with the discipline of ``pairs.block_pair_stream``: each row
+    KNOWS its token's df, so a hot token (df > ``HOT_TOKEN_THRESHOLD``)
+    splits the big index side over ``N_SALTS`` reducers by
+    ``pmod(xxhash64(id), N_SALTS)`` while the small probe side replicates
+    to every salt — no size-table join.  The join is pinned shuffle_hash
+    with the probe side as build: both sides are corpus-cardinality and
+    must never broadcast.
+    """
+    probe = _signature_rows(ordered, prefix_len)
+    ida, idb = F.col("a._id"), F.col("b._id")
+    key = F.col("a._t") == F.col("b._t")
+    if full_index:
+        index = _signature_rows(ordered, F.col("_n"))
+        salts = F.when(
+            F.col("_df") > HOT_TOKEN_THRESHOLD, F.lit(N_SALTS)
+        ).otherwise(F.lit(1))
+        probe = probe.withColumn(
+            "_salt", F.explode(F.sequence(F.lit(0), salts - 1))
+        )
+        index = index.withColumn(
+            "_salt", F.pmod(F.xxhash64("_id"), salts).cast("int")
+        )
+        # a pair is found from either side's prefix: normalise its order
+        key = key & (F.col("a._salt") == F.col("b._salt")) & (ida != idb)
+        ida, idb = F.least(ida, idb), F.greatest(ida, idb)
+    else:
+        # prefix against prefix is symmetric: keep one orientation
+        index = probe
+        key = key & (ida < idb)
+    if cond is not None:
+        key = key & cond
+    return (
+        index.alias("a")
+        .join(probe.alias("b").hint("shuffle_hash"), key)
+        .select(ida.alias("id_a"), idb.alias("id_b"))
+    )
+
+
+def _overlap_verify(cand: DataFrame, ordered: DataFrame) -> DataFrame:
+    """Deduplicated candidates joined to both docs' full token sets ->
+    ``(id_a, id_b, _i, _na, _nb, jaccard)``, where ``_i`` is the exact
+    overlap (JVM ``array_intersect``) and ``_na``/``_nb`` the set sizes."""
+    full = ordered.select("_id", F.col("_ord._t"), "_n")
+    inter = F.size(F.array_intersect("_ta", "_tb"))
+    return (
+        cand.distinct()
+        .join(full.toDF("id_a", "_ta", "_na").hint("shuffle_hash"), "id_a")
+        .join(full.toDF("id_b", "_tb", "_nb").hint("shuffle_hash"), "id_b")
+        .select("id_a", "id_b", inter.alias("_i"), "_na", "_nb")
+        .withColumn(
+            "jaccard",
+            F.col("_i").cast("double")
+            / (F.col("_na") + F.col("_nb") - F.col("_i")).cast("double"),
         )
     )
 
@@ -86,39 +207,21 @@ def prefix_filter_jaccard_join(
 
     Tokenization is the engine-wide :func:`_distinct_tokens` so results are
     directly comparable with the MinHash path (q21) at the same threshold.
+    Runs its lineage cut at construction: see the eager-construction
+    contract of :func:`_df_ordered_tokens`.
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    toks = (
+    t = float(threshold)
+    ordered = _df_ordered_tokens(
         df.select(
             F.col(id_col).alias("_id"), _distinct_tokens(text_col).alias("_tok")
         )
-        .where(F.size("_tok") > 0)
     )
-    # four consumers (both prefix sides, both verify sides) would each
-    # re-run the tokenize->df->order chain: cut lineage once
-    ordered = _df_ordered_tokens(toks).localCheckpoint(eager=True)
     # prefix length |x| - ceil(t|x|) + 1: the rarest tokens whose absence
     # from the other side would already cap jaccard below t
-    plen = (
-        F.col("_n")
-        - F.ceil(F.lit(float(threshold)) * F.col("_n")).cast("int")
-        + F.lit(1)
-    )
-    # posexplode: each prefix token carries its 0-based position in the
-    # doc's df-ordered token list — the input to PPJoin's positional
-    # filter below
-    pref = ordered.select(
-        "_id", "_n", F.posexplode(F.slice("_ord", F.lit(1), plen)).alias("_p", "_t")
-    )
-    a = pref.select(
-        F.col("_id").alias("id_a"), F.col("_n").alias("_na"),
-        F.col("_p").alias("_pa"), "_t",
-    )
-    b = pref.select(
-        F.col("_id").alias("id_b"), F.col("_n").alias("_nb"),
-        F.col("_p").alias("_pb"), "_t",
-    )
+    plen = F.col("_n") - F.ceil(F.lit(t) * F.col("_n")).cast("int") + F.lit(1)
+    na, nb, pa, pb = (F.col(c) for c in ("a._n", "b._n", "a._p", "b._p"))
     # Two lossless filters folded into the join:
     # * length filter: jaccard >= t forces min(|x|,|y|)/max(|x|,|y|) >= t;
     # * POSITIONAL filter (PPJoin, Xiao et al. WWW'08): both token lists
@@ -131,56 +234,84 @@ def prefix_filter_jaccard_join(
     #   pair passes — keeping pairs that pass on ANY token loses nothing
     #   (the 1e-9 slack keeps float ceil from over-rounding the
     #   requirement; under-rounding only admits extra candidates).
-    required = F.ceil(
-        F.lit(float(threshold) / (1.0 + float(threshold)))
-        * (F.col("a._na") + F.col("b._nb"))
-        - F.lit(1e-9)
-    )
+    required = F.ceil(F.lit(t / (1.0 + t)) * (na + nb) - F.lit(1e-9))
     pos_bound = (
-        F.least("a._pa", "b._pb")
-        + F.lit(1)
-        + F.least(
-            F.col("a._na") - F.col("a._pa") - F.lit(1),
-            F.col("b._nb") - F.col("b._pb") - F.lit(1),
-        )
+        F.least(pa, pb) + F.lit(1) + F.least(na - pa - F.lit(1), nb - pb - F.lit(1))
     )
-    # signature self-join: both sides are exploded corpus prefixes —
-    # pinned shuffle_hash for the same reason as the df table
-    cand = (
-        a.alias("a")
-        .join(
-            b.alias("b").hint("shuffle_hash"),
-            (F.col("a._t") == F.col("b._t"))
-            & (F.col("a.id_a") < F.col("b.id_b"))
-            & (
-                F.least("a._na", "b._nb")
-                >= F.lit(float(threshold)) * F.greatest("a._na", "b._nb")
-            )
-            & (pos_bound >= required),
-        )
-        .select("id_a", "id_b")
-        .distinct()
+    cand = _signature_join(
+        ordered,
+        plen,
+        (F.least(na, nb) >= F.lit(t) * F.greatest(na, nb))
+        & (pos_bound >= required),
     )
-    full = ordered.select("_id", "_ord", "_n")
-    va = full.select(
-        F.col("_id").alias("id_a"),
-        F.col("_ord").alias("_ta"),
-        F.col("_n").alias("_na"),
-    )
-    vb = full.select(
-        F.col("_id").alias("id_b"),
-        F.col("_ord").alias("_tb"),
-        F.col("_n").alias("_nb"),
-    )
-    inter = F.size(F.array_intersect("_ta", "_tb"))
-    jac = inter.cast("double") / (
-        F.col("_na") + F.col("_nb") - inter
-    ).cast("double")
     return (
-        cand.join(va.hint("shuffle_hash"), "id_a")
-        .join(vb.hint("shuffle_hash"), "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .where(F.col("jaccard") >= float(threshold))
+        _overlap_verify(cand, ordered)
+        .select("id_a", "id_b", "jaccard")
+        .where(F.col("jaccard") >= t)
+    )
+
+
+def containment_near_duplicates(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    containment_threshold: float = 0.9,
+    max_token_df: int | None = None,
+) -> DataFrame:
+    """Pairs where the SMALLER token set is mostly inside the larger one:
+    ``containment = |A∩B| / min(|A|,|B|) >= threshold`` -> (id_a, id_b,
+    containment, jaccard), ``id_a < id_b``.
+
+    Symmetric-Jaccard LSH structurally misses small-inside-big duplication
+    (a quote page inside an aggregator page has jaccard |A|/|B| ~ 0 but
+    containment 1), which is why dedup pipelines carry a containment pass
+    alongside MinHash (the reference's kNN retrieval has the same blind
+    spot — cosine over whole-doc embeddings dilutes an embedded fragment;
+    reference lib/opensearch/services/search_query_builder.py:46-62).
+
+    **Exact, not probabilistic**: if the smaller set A has containment
+    >= t in B then at most ``floor((1-t)·|A|)`` of A's tokens are missing
+    from B, so by pigeonhole at least one of A's first
+    ``floor((1-t)·|A|)+1`` rarest tokens (its PREFIX) appears in B.
+    Joining prefixes against the full inverted index therefore finds every
+    qualifying pair, and the ``array_intersect`` verify over the hashed
+    token sets makes the output exact.  Rarest-first ordering keeps the
+    probe side cheap: per-token candidate lists stay short.
+
+    ``max_token_df`` is the vocabulary cap for web scale (see
+    :func:`_df_ordered_tokens`); dropping stopwords index-side only would
+    silently lose recall.  Default None keeps the full vocabulary (the
+    oracle-comparable form).  Token-empty docs (blank text, or fully
+    stopword under the cap) never pair — the q21 oracle convention.
+
+    Runs its lineage cut at construction: see the eager-construction
+    contract of :func:`_df_ordered_tokens`.
+    """
+    t = float(containment_threshold)
+    if not 0.0 < t <= 1.0:
+        raise ValueError(
+            f"containment_threshold must be in (0, 1], got {containment_threshold}"
+        )
+    ordered = _df_ordered_tokens(
+        df.select(
+            F.col(id_col).alias("_id"),
+            F.transform(_distinct_tokens(text_col), lambda x: F.xxhash64(x)).alias(
+                "_tok"
+            ),
+        ),
+        max_df=max_token_df,
+    )
+    # floor((1-t)·n)+1, guarded against float-low rounding (an undersized
+    # prefix breaks the pigeonhole guarantee; oversized only costs work)
+    plen = F.least(
+        (F.floor((1.0 - t) * F.col("_n") + 1e-9) + 1).cast("int"), F.col("_n")
+    )
+    cand = _signature_join(ordered, plen, full_index=True)
+    containment = F.col("_i").cast("double") / F.least("_na", "_nb").cast("double")
+    return (
+        _overlap_verify(cand, ordered)
+        .select("id_a", "id_b", containment.alias("containment"), "jaccard")
+        .where(F.col("containment") >= t)
     )
 
 
@@ -227,6 +358,9 @@ def edit_distance_join(
     bounded by the alphabet only for the first population; a corpus heavy
     in long repetitive strings pays |stratum| x |±k length window| in
     candidates there.
+
+    Runs its lineage cut at construction: see the eager-construction
+    contract of :func:`_df_ordered_tokens`.
     """
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
@@ -235,36 +369,16 @@ def edit_distance_join(
     strs = df.select(
         F.col(id_col).alias("_id"), F.col(text_col).alias("_s")
     ).where(F.col("_s").isNotNull())
-    toks = strs.select(
-        "_id", _qgram_set(F.col("_s"), q).alias("_tok")
-    ).where(F.size("_tok") > 0)
-    # three consumers (both prefix sides + the short-string stratum)
-    # would each re-run the gram->df->order chain: cut lineage once
-    ordered = _df_ordered_tokens(toks).localCheckpoint(eager=True)
-    lens = strs.select("_id", F.length("_s").alias("_len"))
-    pref = (
-        ordered.where(F.col("_n") > k * q)
-        .select(
-            "_id",
-            F.explode(F.slice("_ord", F.lit(1), F.lit(k * q + 1))).alias("_g"),
+    # the string length rides along as a per-doc column of the order
+    ordered = _df_ordered_tokens(
+        strs.select(
+            "_id", F.length("_s").alias("_len"), _qgram_set(F.col("_s"), q).alias("_tok")
         )
-        .join(lens.hint("shuffle_hash"), "_id")
     )
-    a = pref.select(
-        F.col("_id").alias("id_a"), F.col("_len").alias("_la"), "_g"
-    )
-    b = pref.select(
-        F.col("_id").alias("id_b"), F.col("_len").alias("_lb"), "_g"
-    )
-    cand = (
-        a.alias("a")
-        .join(
-            b.alias("b").hint("shuffle_hash"),
-            (F.col("a._g") == F.col("b._g"))
-            & (F.col("a.id_a") < F.col("b.id_b"))
-            & (F.abs(F.col("a._la") - F.col("b._lb")) <= k),
-        )
-        .select("id_a", "id_b")
+    cand = _signature_join(
+        ordered.where(F.col("_n") > k * q),
+        F.lit(k * q + 1),
+        F.abs(F.col("a._len") - F.col("b._len")) <= k,
     )
     # EDJoin short-string corner case: <= k*q grams is too little gram
     # evidence for the prefix bound ("a" vs "" is distance 1 with zero
@@ -276,9 +390,9 @@ def edit_distance_join(
     # size estimate could pick the corpus-cardinality `lens` side as the
     # build; AQE converts the shuffle to a runtime broadcast of the short
     # side when it measures it tiny, which is the only trustworthy signal.
+    lens = ordered.select("_id", "_len")
     short = (
         ordered.where(F.col("_n") <= k * q)
-        .join(lens.hint("shuffle_hash"), "_id")
         .select(
             "_id",
             F.explode(
@@ -300,11 +414,9 @@ def edit_distance_join(
         )
     )
     cand = cand.unionAll(short_cand).distinct()
-    sa = strs.select(F.col("_id").alias("id_a"), F.col("_s").alias("_sa"))
-    sb = strs.select(F.col("_id").alias("id_b"), F.col("_s").alias("_sb"))
     return (
-        cand.join(sa.hint("shuffle_hash"), "id_a")
-        .join(sb.hint("shuffle_hash"), "id_b")
+        cand.join(strs.toDF("id_a", "_sa").hint("shuffle_hash"), "id_a")
+        .join(strs.toDF("id_b", "_sb").hint("shuffle_hash"), "id_b")
         .select(
             "id_a",
             "id_b",

@@ -1,5 +1,5 @@
 """Containment (asymmetric-Jaccard) near-dup
-(operators/dedup.py containment_near_duplicates)."""
+(operators/simjoin.py containment_near_duplicates)."""
 
 from __future__ import annotations
 
@@ -9,7 +9,8 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from semantic_entity_matching_spark.operators.dedup import (
+from semantic_entity_matching_spark.operators import simjoin
+from semantic_entity_matching_spark.operators.simjoin import (
     containment_near_duplicates,
 )
 
@@ -121,17 +122,17 @@ def test_vocabulary_cap_filters_universe(spark):
     assert capped[("e3", "e4")].containment == 1.0
 
 
-def test_hot_token_salting_identical_output(spark):
+def test_hot_token_salting_identical_output(spark, monkeypatch):
     # force every token hot (threshold 0) — salted fan-out must not change
     # the result set
     base = containment_near_duplicates(
         _docs(spark, _ROWS), containment_threshold=0.9
     )
+    monkeypatch.setattr(simjoin, "HOT_TOKEN_THRESHOLD", 0)
+    monkeypatch.setattr(simjoin, "N_SALTS", 4)
     salted = containment_near_duplicates(
         _docs(spark, _ROWS),
         containment_threshold=0.9,
-        hot_token_threshold=0,
-        n_salts=4,
     )
     assert {tuple(r) for r in base.collect()} == {
         tuple(r) for r in salted.collect()

@@ -64,22 +64,34 @@ def test_filter_nan_matches_reference():
 
 
 def test_canonical_text_udf_matches_python(spark):
+    # nullable-int, bool and array columns: each value must render as str()
+    # of its per-record value whatever shares its Arrow batch (a null int in
+    # the batch must not turn 42 into 42.0)
+    cols = ["url", "text", "lang", "n", "flag", "tags"]
     rows = [
-        ("https://a", "Blood sugar, fasting", "en"),
-        ("https://b", None, "en"),
-        ("https://c", "x", None),
-        ("https://e", "tabs\tand\nnewlines", "zh"),
+        ("https://a", "Blood sugar, fasting", "en", 42, True, ["x", "y"]),
+        ("https://b", None, "en", None, False, []),
+        ("https://c", "x", None, 7, None, None),
+        ("https://e", "tabs\tand\nnewlines", "zh", -1, True, ["solo"]),
+        ("https://f", "f", "en", 0, False, [None]),
+        ("https://g", "g", "en", None, None, ["a", None, "it's"]),
+        ("https://h", "h", "en", 2**31 - 1, True, []),
     ]
-    df = spark.createDataFrame(rows, "url string, text string, lang string")
-    got = {
-        r["url"]: r["out"]
-        for r in df.select(
-            "url", canonical_text_udf(["url", "text", "lang"]).alias("out")
-        ).collect()
-    }
-    for url, text, lang in rows:
-        expected = canonical_entity_text({"url": url, "text": text, "lang": lang})
-        assert got[url] == expected, f"mismatch for {url!r}"
+    df = spark.createDataFrame(
+        rows,
+        "url string, text string, lang string, n int, flag boolean, "
+        "tags array<string>",
+    )
+    for frame in (df, df.coalesce(1)):
+        got = {
+            r["url"]: r["out"]
+            for r in frame.select(
+                "url", canonical_text_udf(cols).alias("out")
+            ).collect()
+        }
+        for row in rows:
+            expected = canonical_entity_text(dict(zip(cols, row)))
+            assert got[row[0]] == expected, f"mismatch for {row[0]!r}"
 
 
 def test_query_text_nan_semantics():

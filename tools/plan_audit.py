@@ -596,15 +596,17 @@ def main() -> None:
         else "update_components plan grew a Window or Cartesian node",
     )
 
-    # 23. lossless similarity joins (q104 prefix-filter Jaccard, q105
-    # qgram edit-distance): every annotation table in these plans —
+    # 23. lossless similarity joins (q84 prefix-filter containment, q104
+    # prefix-filter Jaccard, q105 qgram edit-distance — one core in
+    # operators/simjoin.py): every annotation table in these plans —
     # the DF/vocabulary table (one row per distinct token), the
-    # token-set / length / string side tables (one row per record) —
-    # is corpus- or vocabulary-cardinality and must NEVER broadcast.
-    # Catalyst would happily broadcast them off small-scale stats, so
-    # the operator pins shuffle_hash; assert no BroadcastHashJoin (or
-    # BroadcastNLJ/Cartesian) survives in either plan.
+    # signature / token-set / length / string side tables (one row per
+    # record or token) — is corpus- or vocabulary-cardinality and must
+    # NEVER broadcast.  Catalyst would happily broadcast them off
+    # small-scale stats, so the core pins shuffle_hash; assert no
+    # BroadcastHashJoin (or BroadcastNLJ/Cartesian) survives in any plan.
     for qname, fn in (
+        ("q84", E.q84_containment_neardup),
         ("q104", E.q104_simjoin_jaccard),
         ("q105", E.q105_edit_distance_join),
     ):
