@@ -1,24 +1,28 @@
-"""Approximate nearest-neighbor search over an embedding column.
+"""Nearest-neighbor search over an embedding column.
 
 Replaces the reference's OpenSearch HNSW kNN retrieval (reference
-lib/opensearch/services/search_query_builder.py:46-62) with two Spark-native
+lib/opensearch/services/search_query_builder.py:46-62) with Spark-native
 strategies:
 
-* ``brute_force_topk`` — exact cosine top-k: queries broadcast against the
-  corpus, one window per query.  Correctness baseline; O(|Q| x |C|) work
+* ``brute_force_topk`` — exact cosine top-k.  The query matrix is
+  broadcast and each corpus Arrow batch is scored against every query in
+  one numpy pass that keeps only the cells that can still reach their
+  query's top k; ``ranked_topk`` merges the batches.  O(|Q| x |C|) work
   but embarrassingly parallel (corpus partitions never shuffle).
 * ``lsh_topk`` — scale path: random-hyperplane LSH buckets both sides;
   candidates only meet inside a bucket (equi-join), then exact cosine +
   top-k.  Recall is tunable via (n_tables, n_bits); the reference's 2x
   over-fetch knob (k = 2*size, search_query_builder.py:58) maps to
   ``overfetch``.
+* ``ivf_topk`` — scale path: each query probes its nearest k-means cells.
 
-Both return (query_id, candidate_id, score, rank) with rank 1-based by
+All return (query_id, candidate_id, score, rank) with rank 1-based by
 (score desc, candidate_id asc) — deterministic tiebreak (SURVEY §2.5 W1).
 """
 
 from __future__ import annotations
 
+from functools import partial, reduce
 from typing import Iterator
 
 import numpy as np
@@ -27,12 +31,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from semantic_entity_matching_spark.functions.similarity import cosine_udf
-
-
-def _rank_window(query_col: str) -> Window:
-    return Window.partitionBy(query_col).orderBy(
-        F.desc("score"), F.asc("candidate_id")
-    )
 
 
 def ranked_topk(scored: DataFrame, k: int, query_col: str = "query_id") -> DataFrame:
@@ -47,103 +45,92 @@ def ranked_topk(scored: DataFrame, k: int, query_col: str = "query_id") -> DataF
     the exchange — each input partition forwards at most k rows per query
     — and a ``WindowGroupLimit(Final)`` after it, so the per-query window
     task sees <= k * num_input_partitions rows, never the candidate set.
-    This is exactly the round-5 manual salted two-phase plan
-    (rank within (query, spark_partition_id), keep k, merge), minus the
-    extra ``_pid`` exchange and two of its four sorts — the engine's
-    partial limit reuses the map stage it already has.  The plan shape
-    (WindowGroupLimit Partial present, single Exchange) is pinned by
-    tools/plan_audit.py; ties resolve identically because both phases use
-    the same (score desc, candidate_id asc) total order, so output is
-    partitioning-independent."""
+    The plan shape (WindowGroupLimit Partial present, single Exchange) is
+    pinned by tools/plan_audit.py; ties resolve identically because both
+    phases use the same (score desc, candidate_id asc) total order, so
+    output is partitioning-independent."""
+    w = Window.partitionBy(query_col).orderBy(F.desc("score"), F.asc("candidate_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(_rank_window(query_col)))
+        scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select(query_col, "candidate_id", "score", "rank")
     )
 
 
-# Query batches up to this size score via the grouped one-pass scorer
-# (query matrix broadcast, corpus crosses the Python boundary ONCE);
-# larger query sides fall back to the broadcast-join form.  The bound only
-# gates a driver-side collect the join form would broadcast anyway — 16k
-# queries x dim 1024 in float64 (exactness requires the wide accumulator
-# dtype) is a ~128 MB broadcast, within the join path's own broadcast
-# budget for the same table.
+# Query sides are scored in chunks of at most this many queries, one
+# broadcast and one mapInPandas pass over the corpus per chunk.  Sizes the
+# broadcast (16k queries x dim 1024 in float64, the dtype exactness
+# requires: ~128 MB) and the dense per-batch matrices (brute_force_topk).
 GROUPED_QUERY_BOUND = 16_384
 
+# Slack on top of the 10^-d rounding width: cosines lie in [-1, 1], so the
+# float error of Spark's rounding and of ``kth - delta`` is ~1e-16.
+_ROUND_SLACK = 1e-12
 
-def _grouped_brute_scores(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    corpus_id: str,
-    vec_col: str,
-) -> DataFrame | None:
-    """(query_id, candidate_id, score) via ONE mapInPandas pass over the
-    corpus, or None when the query side exceeds GROUPED_QUERY_BOUND.
 
-    The broadcast-join form replicates every corpus vector once PER QUERY
-    through the cosine UDF — at 20 queries x 60k docs x dim 1024 that is
-    ~5 GB crossing the JVM->Python boundary for ~250 MB of corpus vectors
-    (measured: the dominant cost of the search/rerank bench query).  Here
-    the query matrix is sc.broadcast to every executor and each corpus
-    batch is scored against ALL queries with one float64
-    ``einsum("ij,kj->ik")`` — bit-identical to the per-pair
-    ``einsum("ij,ij->i")`` the pandas cosine UDF computes (verified
-    empirically; same float64 dot/norm/divide per pair), so ranking and
-    scores are unchanged.  Null corpus vectors are skipped exactly like
-    the join path's input null-filter; null query vectors likewise."""
-    q_rows = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
-    ).take(GROUPED_QUERY_BOUND + 1)
-    if len(q_rows) > GROUPED_QUERY_BOUND:
-        return None
-    q_rows = [r for r in q_rows if r["_qv"] is not None]
-    spark = corpus.sparkSession
-    c = corpus.select(
-        F.col(corpus_id).alias("candidate_id"), F.col(vec_col).alias("_cv")
-    )
-    qid_type = queries.schema[query_id].dataType.simpleString()
-    cid_type = corpus.schema[corpus_id].dataType.simpleString()
-    if not q_rows:
-        return spark.createDataFrame(
-            [], f"query_id {qid_type}, candidate_id {cid_type}, score double"
+def _select_cells(
+    scores: np.ndarray, k: int | None, delta: float = 0.0, drop=None
+) -> tuple[np.ndarray, np.ndarray]:
+    """Row-major (row, column) indices of the cells of an ``(n_rows,
+    n_queries)`` score matrix that can still reach their column's top k:
+    score >= the column's k-th best - ``delta``.  A cell in a query's top k
+    over all batches is in its own batch's top k under the same total
+    order, so ``ranked_topk`` over the kept cells is exact.  Rounding to d
+    decimals afterwards is monotone and moves a score by at most 10^-d / 2,
+    so ``delta`` = 10^-d (plus float slack) keeps this for the rounded
+    ranking.  A NaN score reaches Spark as null (pandas-to-Arrow), which
+    the descending window ranks last, so NaN ranks as -inf here.  ``drop``
+    cells (self-pairs; overwritten in ``scores``) are never kept and do
+    not count toward k; ``k=None`` keeps every other cell.
+
+    Bound: with no two scores of a column within ``delta`` of its k-th
+    best, at most k cells per column are kept, so a 2,048-row batch against
+    GROUPED_QUERY_BOUND queries yields at most k x 16,384 rows, not 33.5M."""
+    n_rows = scores.shape[0]
+    if k is None or n_rows <= k:
+        keep = np.ones(scores.shape, dtype=bool)
+    else:
+        nan = np.isnan(scores)
+        scores[nan] = -np.inf
+        if drop is not None:
+            scores[drop] = -np.inf
+        kth = np.partition(scores, n_rows - k, axis=0)[n_rows - k]
+        keep = scores >= kth - delta
+        scores[nan] = np.nan
+    if drop is not None:
+        keep[drop] = False
+    return np.nonzero(keep)
+
+
+def _score_batches(
+    batches: Iterator[pd.DataFrame], bc, k: int | None, delta: float, exclude_self: bool
+) -> Iterator[pd.DataFrame]:
+    """mapInPandas body: each corpus batch against all broadcast queries in
+    one float64 ``einsum("ij,kj->ik")`` — bit-identical to the per-pair
+    ``einsum("ij,ij->i")`` of the pandas cosine UDF — trimmed by
+    ``_select_cells``.  Self-pairs are ids equal by Python value."""
+    qids, qmat, qnorm = bc.value
+    qid_arr = np.asarray(qids, dtype=object)
+    self_cols: dict = {}
+    for j, qid in enumerate(qids if exclude_self else ()):
+        self_cols.setdefault(qid, []).append(j)
+    for batch in batches:
+        if batch.empty:
+            continue
+        mat = np.vstack(batch["_cv"].to_numpy()).astype(np.float64)
+        scores = np.einsum("ij,kj->ik", mat, qmat)  # (n, nq) dots
+        norms = np.linalg.norm(mat, axis=1)[:, None] * qnorm[None, :]
+        valid = norms > 0
+        np.divide(scores, norms, out=scores, where=valid)
+        scores[~valid] = 0.0
+        del norms, valid
+        ids = batch["candidate_id"].to_numpy()
+        cells = [(i, j) for i, cid in enumerate(ids.tolist()) for j in self_cols.get(cid, ())]
+        drop = tuple(np.array(cells, dtype=np.intp).T) if cells else None
+        rows, cols = _select_cells(scores, k, delta, drop)
+        yield pd.DataFrame(
+            {"query_id": qid_arr[cols], "candidate_id": ids[rows], "score": scores[rows, cols]}
         )
-    qids = [r["query_id"] for r in q_rows]
-    qmat = np.array([r["_qv"] for r in q_rows], dtype=np.float64)
-    qnorm = np.linalg.norm(qmat, axis=1)
-    bc = spark.sparkContext.broadcast((qids, qmat, qnorm))
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        b_qids, b_qmat, b_qnorm = bc.value
-        nq = len(b_qids)
-        qid_arr = np.asarray(b_qids, dtype=object)
-        for batch in batches:
-            vecs = batch["_cv"]
-            mask = vecs.notna()
-            if not mask.any():
-                yield pd.DataFrame(
-                    {"query_id": [], "candidate_id": [], "score": []}
-                )
-                continue
-            mat = np.vstack(vecs[mask].to_numpy()).astype(np.float64)
-            dots = np.einsum("ij,kj->ik", mat, b_qmat)  # (n, nq)
-            norms = np.linalg.norm(mat, axis=1)[:, None] * b_qnorm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                scores = np.where(norms > 0, dots / norms, 0.0)
-            ids = batch.loc[mask, "candidate_id"].to_numpy()
-            yield pd.DataFrame(
-                {
-                    "query_id": np.tile(qid_arr, len(ids)),
-                    "candidate_id": np.repeat(ids, nq),
-                    "score": scores.reshape(-1),
-                }
-            )
-
-    return c.where(F.col("_cv").isNotNull()).mapInPandas(
-        gen,
-        schema=f"query_id {qid_type}, candidate_id {cid_type}, score double",
-    )
 
 
 def brute_force_topk(
@@ -157,74 +144,76 @@ def brute_force_topk(
     score_round: int | None = None,
     exclude_pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k.  The query side is small by construction (the
-    join form broadcasts it; the grouped form collects + re-broadcasts it
-    under the same assumption); the corpus never shuffles.
+    """Exact cosine top-k.  The query side is collected (one job at
+    construction) and sc.broadcast in chunks of GROUPED_QUERY_BOUND; per
+    chunk, ONE mapInPandas pass scores every corpus Arrow batch against all
+    of the chunk's queries and keeps the rows that can reach a query's top
+    k (``_score_batches``).  ``ranked_topk`` over the union is the exact
+    merge.  The corpus never shuffles; null vectors are never scored.
 
     ``score_round``: round the cosine BEFORE ranking so near-ties (< 1 ulp
     apart) become exact ties broken by candidate_id — makes the top-k set
     reproducible across engines/partitionings (SURVEY §7.3 hard part (c)).
 
-    ``exclude_pairs`` — a ``(query_id, candidate_id)`` table anti-joined
-    off the candidate stream before RANKING (so excluded rows can never
-    displace a result): the hook hard-negative mining uses to remove known
-    positives.  Joined as an ordinary hash anti-join — the pair table may
-    be corpus-scale (one positive per record), never force-broadcast.
+    ``exclude_self`` drops equal-id cells (and, like SQL ``!=``, null ids)
+    before selection.  ``exclude_pairs`` — a ``(query_id, candidate_id)``
+    table anti-joined off the candidate stream before RANKING (so excluded
+    rows can never displace a result): the hook hard-negative mining uses
+    to remove known positives.  The scorer then keeps every row for an
+    ordinary hash anti-join — the pair table may be corpus-scale (one
+    positive per record), never force-broadcast.
+
+    Bounds: the driver holds |Q| x dim float64; per task, a batch_rows x
+    chunk_queries float64 score matrix — 256 MB at the 2,048-row Arrow
+    batch and GROUPED_QUERY_BOUND queries — plus one more of that size
+    (the norms, then np.partition's copy) and 32 MB boolean masks.
     """
-    grouped = _grouped_brute_scores(queries, corpus, query_id, corpus_id, vec_col)
-    if grouped is not None:
-        scored = grouped
-        if exclude_self:
-            scored = scored.where(F.col("query_id") != F.col("candidate_id"))
-        if exclude_pairs is not None:
-            missing = {"query_id", "candidate_id"} - set(exclude_pairs.columns)
-            if missing:
-                raise ValueError(
-                    f"exclude_pairs needs columns query_id/candidate_id, missing {sorted(missing)}"
-                )
-            scored = scored.join(
-                exclude_pairs.select("query_id", "candidate_id"),
-                ["query_id", "candidate_id"],
-                "left_anti",
-            )
-        if score_round is not None:
-            scored = scored.withColumn(
-                "score", F.round(F.col("score"), score_round)
-            )
-        return ranked_topk(scored, k)
-    q = queries.select(
-        F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
-    )
-    c = corpus.select(
-        F.col(corpus_id).alias("candidate_id"), F.col(vec_col).alias("_cv")
-    )
-    joined = c.join(F.broadcast(q))
-    if exclude_self:
-        joined = joined.where(F.col("query_id") != F.col("candidate_id"))
     if exclude_pairs is not None:
         missing = {"query_id", "candidate_id"} - set(exclude_pairs.columns)
         if missing:
             raise ValueError(
                 f"exclude_pairs needs columns query_id/candidate_id, missing {sorted(missing)}"
             )
-        joined = joined.join(
+    q = queries.select(
+        F.col(query_id).alias("query_id"), F.col(vec_col).alias("_qv")
+    ).where(F.col("_qv").isNotNull())
+    c = corpus.select(
+        F.col(corpus_id).alias("candidate_id"), F.col(vec_col).alias("_cv")
+    ).where(F.col("_cv").isNotNull())
+    if exclude_self:
+        q = q.where(F.col("query_id").isNotNull())
+        c = c.where(F.col("candidate_id").isNotNull())
+    q_rows = q.collect()
+    qid_type = queries.schema[query_id].dataType.simpleString()
+    cid_type = corpus.schema[corpus_id].dataType.simpleString()
+    schema = f"query_id {qid_type}, candidate_id {cid_type}, score double"
+    # k < 1 ranks nothing; selecting at least 1 keeps the index valid
+    body = partial(
+        _score_batches,
+        k=max(k, 1) if exclude_pairs is None else None,
+        delta=0.0 if score_round is None else 10.0**-score_round + _ROUND_SLACK,
+        exclude_self=exclude_self,
+    )
+    parts = []
+    for lo in range(0, len(q_rows), GROUPED_QUERY_BOUND):
+        chunk = q_rows[lo : lo + GROUPED_QUERY_BOUND]
+        qmat = np.array([r["_qv"] for r in chunk], dtype=np.float64)
+        bc = corpus.sparkSession.sparkContext.broadcast(
+            ([r["query_id"] for r in chunk], qmat, np.linalg.norm(qmat, axis=1))
+        )
+        parts.append(c.mapInPandas(partial(body, bc=bc), schema=schema))
+    if not parts:  # no query has a vector
+        return ranked_topk(corpus.sparkSession.createDataFrame([], schema), k)
+    scored = reduce(DataFrame.union, parts)
+    if exclude_pairs is not None:
+        scored = scored.join(
             exclude_pairs.select("query_id", "candidate_id"),
             ["query_id", "candidate_id"],
             "left_anti",
         )
-    # a null embedding on either side cannot be scored: drop the row rather
-    # than rank it (engines disagree on NULL ordering in DESC windows).
-    # The filter runs on the INPUT columns, not on the UDF output —
-    # cosine_udf returns null exactly when an input is null, but filtering
-    # its output makes Catalyst evaluate the UDF twice (once under the
-    # pushed-down filter, once in the projection — guide §4.4), doubling
-    # the Python cosine work.  Same rows survive either way.
-    joined = joined.where(F.col("_qv").isNotNull() & F.col("_cv").isNotNull())
-    scored = joined.withColumn("score", cosine_udf(F.col("_qv"), F.col("_cv")))
     if score_round is not None:
         scored = scored.withColumn("score", F.round(F.col("score"), score_round))
-    # salted two-phase top-k: the corpus-cardinality per-query candidate
-    # set must never sort in one window task
+    # per-batch selection leaves a superset of each top k; this is the exact merge
     return ranked_topk(scored, k)
 
 
@@ -351,8 +340,8 @@ def lsh_topk(
     # bucket set yields >= k*overfetch collisions when n_tables is sized
     # right); the final exact rank truncates to k like the reference's
     # caller-side cut.
-    # hot buckets make a query's candidate set unbounded: salted
-    # two-phase top-k, never one window task per query
+    # hot buckets make a query's candidate set unbounded: ranked_topk's
+    # partial limit keeps it out of one window task
     return ranked_topk(scored, k)
 
 
@@ -554,8 +543,8 @@ def ivf_topk(
     )
     if score_round is not None:
         scored = scored.withColumn("score", F.round(F.col("score"), score_round))
-    # a hot probed cell makes the candidate set unbounded: salted
-    # two-phase top-k, never one window task per query
+    # a hot probed cell makes the candidate set unbounded: ranked_topk's
+    # partial limit keeps it out of one window task
     return ranked_topk(scored, k)
 
 
@@ -583,8 +572,8 @@ def mine_hard_negatives(
     with ``symmetric=True`` (unordered ER labels) the reversed pairs are
     excluded too (one unionByName of two projections — no extra scan of
     the corpus side).  Exclusion is a hash anti-join applied BEFORE
-    scoring (excluded pairs never pay a cosine and never displace a
-    result), self-pairs are always excluded.
+    ranking (excluded pairs never displace a result); self-pairs are
+    always excluded.
 
     Retrieval here is the exact brute-force baseline; at corpus scale
     mine per-shard with ``lsh_topk``/``ivf_topk`` candidates and apply the

@@ -195,7 +195,7 @@ def lexical_topk(
         # candidate_id — reproducible top-k across engines/partitionings
         scored = scored.withColumn("score", F.round(F.col("score"), score_round))
     # a common query term matches an unbounded slice of the corpus —
-    # salted two-phase top-k, never one window task per query
+    # ranked_topk's partial limit keeps it out of one window task
     from semantic_entity_matching_spark.operators.ann import ranked_topk
 
     return ranked_topk(scored, k)

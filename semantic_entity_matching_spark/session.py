@@ -113,6 +113,8 @@ def get_session(
         # 964.9k-pair q21 contract and 120k-page legs fit in 12g.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
+        # the console progress bar redraws on stderr and floods run logs
+        .config("spark.ui.showConsoleProgress", "false")
     )
     # Local mode: shuffle spill files on the default /tmp disk serialize the
     # whole job behind one spindle once >8 threads write at once (measured

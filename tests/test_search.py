@@ -152,11 +152,11 @@ def test_gold_rank_null_when_not_retrieved(spark, catalog, queries):
 
 
 def test_ranked_topk_partitioning_independent(spark):
-    """The salted two-phase top-k (rank within (query, input partition),
-    then merge) must return the exact global top-k under ANY input
-    partitioning — phase 1 never drops a winner because every global
-    top-k row ranks <= k within its own partition under the same total
-    order."""
+    """ranked_topk's partial-then-final limit (WindowGroupLimit keeps k
+    per (query, input partition), the window merges) must return the exact
+    global top-k under ANY input partitioning — the partial limit never
+    drops a winner because every global top-k row ranks <= k within its
+    own partition under the same total order."""
     import random
 
     from pyspark.sql import Window

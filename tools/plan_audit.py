@@ -9,8 +9,9 @@ if a property regresses.  Properties audited:
      (PushedFilters contains the lang predicate)
   3. index reuse     — q19's BM25 plan reads the persisted inverted index
      (InMemoryTableScan) instead of re-tokenizing the corpus
-  4. broadcast       — q17's query side broadcasts (BroadcastExchange /
-     BroadcastNestedLoopJoin), the corpus never shuffles
+  4. one vector scorer — q17 and q29 score through the grouped MapInPandas
+     scorer (query matrix sc.broadcast, no BroadcastNestedLoopJoin or
+     CartesianProduct), the corpus never shuffles below it
   5. codegen         — q01's agg pipeline runs inside WholeStageCodegen
                        (checked on the executed AQE final plan)
   6. no corpus broadcast in pair scoring — score_pairs joins the records
@@ -145,6 +146,21 @@ def main() -> None:
         "q17_topk_window_group_limit_partial",
         "WindowGroupLimit" in e17 and "Partial" in e17,
         f"WindowGroupLimit x{e17.count('WindowGroupLimit')}",
+    )
+    # 4b. brute_force_topk has one scorer: no plan may carry a join-form
+    # retriever (a nested-loop or Cartesian product of queries x corpus),
+    # and q29's retriever is the grouped MapInPandas scorer
+    for qname, e_q in (("q17", e17), ("q29", e29)):
+        n_nl = e_q.count("BroadcastNestedLoopJoin") + e_q.count("CartesianProduct")
+        check(
+            f"{qname}_no_nested_loop_or_cartesian",
+            n_nl == 0,
+            f"BroadcastNestedLoopJoin/CartesianProduct x{n_nl}",
+        )
+    check(
+        "q29_retriever_map_in_pandas",
+        "MapInPandas" in e29,
+        f"MapInPandas x{e29.count('MapInPandas')}",
     )
 
     # 5. q01 agg inside whole-stage codegen (explain mode "codegen" reports
